@@ -88,7 +88,14 @@ def bloom_might_contain(
     (:func:`bloom_build`'s ``hash_fn``): probing an xxhash64-built
     bitmap with md5 positions (or vice versa) yields silent FALSE
     NEGATIVES, voiding the no-false-negative guarantee the reduced-join
-    == unfiltered-join law rests on."""
+    == unfiltered-join law rests on.
+
+    The result is never NULL: each probe is coalesced to FALSE. With
+    the default ``hash_fn="md5"`` a NULL ``key`` therefore returns
+    FALSE. With ``"xxhash64"`` a NULL key still hashes (to the seed
+    alone), so it may return TRUE, a false positive. Either way the
+    reduced-join == unfiltered-join law holds, since a NULL key never
+    matches an equi-join."""
     words = F.array(*[F.lit(int(w)).cast("long") for w in bitmap])
     cond = None
     for j in range(k):

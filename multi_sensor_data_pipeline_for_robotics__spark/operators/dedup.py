@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 import os
 
 from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-    DEFAULT_PERSIST_MIN_BYTES,
     auto_bucket_cap,
     estimated_source_bytes,
     maybe_persist,
@@ -224,7 +223,14 @@ def ngram_jaccard_pairs(
     stops multiplying the Σ df² join cost by c². Connectivity through
     the representative is preserved (components unchanged); run it
     when the corpus has NOT already been through ``dedup_exact``.
+
+    Raises ``ValueError`` for ``threshold`` outside [0, 1] (or NaN) and
+    for ``n < 1``.
     """
+    if not 0.0 <= threshold <= 1.0:  # NaN fails both comparisons
+        raise ValueError(f"threshold must be in [0, 1], got {threshold!r}")
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n!r}")
     star = None
     if collapse_identical:
         df, star = _collapse_exact_texts(df, text_col, id_col)

@@ -50,6 +50,25 @@ def test_ngram_jaccard_matches_manual(spark, docs):
     assert (1, 4) not in got.index
 
 
+@pytest.mark.parametrize(
+    "kw, name",
+    [
+        ({"threshold": -0.1}, "threshold"),
+        ({"threshold": 1.5}, "threshold"),
+        ({"threshold": float("nan")}, "threshold"),
+        ({"n": 0}, "n must"),
+        ({"n": -2}, "n must"),
+    ],
+)
+def test_ngram_jaccard_rejects_bad_params(spark, docs, kw, name):
+    """Out-of-range parameters fail at entry with the parameter's name,
+    not deep inside Spark's ``slice``. Threshold 0.0 stays valid (see
+    the test above), and so does 1.0."""
+    with pytest.raises(ValueError, match=name):
+        D.ngram_jaccard_pairs(docs, **kw)
+    D.ngram_jaccard_pairs(docs, threshold=1.0)
+
+
 def test_shingles_trigram(spark, docs):
     out = docs.select(
         D.shingles(TX.tokens(F.col("text")), 3).alias("sh")

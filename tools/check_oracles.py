@@ -2,7 +2,9 @@
 """Local replica of the driver's t2 correctness gate: run every
 ``queries()`` entry on Spark and its ``oracle_sql()`` twin on DuckDB at
 the same sf, then compare row count, column names, and order-insensitive
-values.
+values. The sweep ends with the session's Janino compile count next to
+the codegen cache bound, and warns when one sweep compiled more classes
+than the bound holds (re-derive the bound in ``session.py`` then).
 
 Usage:
     python tools/check_oracles.py                 # all queries @ sf0.01
@@ -25,6 +27,10 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from multi_sensor_data_pipeline_for_robotics__spark import get_session
+from multi_sensor_data_pipeline_for_robotics__spark.session import (
+    CODEGEN_CACHE_MAX_ENTRIES,
+    codegen_compiles,
+)
 from multi_sensor_data_pipeline_for_robotics__spark.sources.tables import TABLES
 
 
@@ -89,6 +95,7 @@ def main():
     args = ap.parse_args()
 
     spark = get_session(app_name="check_oracles")
+    compiles0 = codegen_compiles(spark)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -133,6 +140,14 @@ def main():
             print(f"[{name}] OK ({len(duck_rows)} rows)")
             n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail, {n_skipped} rows-only")
+    compiled = codegen_compiles(spark) - compiles0
+    print(f"codegen: {compiled} classes compiled, cache bound {CODEGEN_CACHE_MAX_ENTRIES}")
+    if compiled > CODEGEN_CACHE_MAX_ENTRIES:
+        print(
+            "WARNING: one sweep compiled more classes than the codegen cache "
+            "holds, so a re-run recompiles them; re-derive "
+            "CODEGEN_CACHE_MAX_ENTRIES in session.py from this count"
+        )
     sys.exit(1 if n_fail else 0)
 
 
